@@ -14,6 +14,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 import time
@@ -78,17 +79,19 @@ def git_sha():
         return None
 
 
-def expected_metrics(trace):
-    """Metric names BENCHMARK.json lists for this mode, when it is present."""
-    p = os.path.join(ROOT, "BENCHMARK.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
+def contract(trace):
+    """(name, unit) of every metric BENCHMARK.json lists for this mode."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
-    return [m["name"] for m in spec["per_layer" if trace else "end_to_end"]]
+    return [(m["name"], m["unit"]) for m in spec["per_layer" if trace else "end_to_end"]]
+
+
+def on_term(signum, _frame):
+    raise SystemExit(128 + signum)
 
 
 def main():
+    signal.signal(signal.SIGTERM, on_term)
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
@@ -106,7 +109,7 @@ def main():
     work = os.path.join(ROOT, ".bench_work", f"{args.workload}-{args.seed}-{args.trace}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
-    log_path = os.path.join(ROOT, ".bench_work", f"{args.workload}.jvm.log")
+    log_path = os.path.join(ROOT, ".bench_work", f"{args.workload}-{args.seed}-{args.trace}.jvm.log")
     jvm_flags = [f"-Xmx{shape['heap_mb']}m", "-Xss8m", "-XX:-UsePerfData",
                  f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}"]
     cmd = (["java"] + jvm_flags + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")] +
@@ -121,11 +124,14 @@ def main():
         try:
             out, _ = proc.communicate(timeout=JVM_TIMEOUT_S)
         except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait()
-            shutil.rmtree(work, ignore_errors=True)
             print(f"graftbench: run exceeded {JVM_TIMEOUT_S} s; see {log_path}", file=sys.stderr)
             return 3
+        finally:
+            # also on SIGTERM/SIGINT: the JVM never outlives this process
+            if proc.poll() is None:
+                proc.kill()
+                proc.wait()
+                shutil.rmtree(work, ignore_errors=True)
     shutil.rmtree(work, ignore_errors=True)
     lines = out.decode("utf-8", "replace").splitlines()
     res = None
@@ -138,14 +144,21 @@ def main():
         print(f"graftbench: JVM exited {proc.returncode} without a result; see {log_path}", file=sys.stderr)
         return 1
 
-    metrics = res["metrics"]
-    want = expected_metrics(args.trace == 1)
-    if want is not None:
-        missing = [m for m in want if m not in metrics]
-        if missing:
-            print(f"graftbench: metrics missing from the run: {missing}", file=sys.stderr)
-            return 1
-        metrics = {m: metrics[m] for m in want}
+    # The JVM reports what it measured. Names and units come from
+    # BENCHMARK.json. An end-to-end metric must always be measured. A
+    # per-layer metric that this workload does not exercise is reported as
+    # not measured, and the result line carries 0 for it.
+    measured = res["metrics"]
+    want = contract(args.trace == 1)
+    missing = [n for n, _ in want if n not in measured]
+    if missing and args.trace == 0:
+        print(f"graftbench: end-to-end metrics not measured: {missing}", file=sys.stderr)
+        return 1
+    names = {n for n, _ in want}
+    metrics = {n: {"value": measured.get(n, 0.0), "unit": u} for n, u in want}
+    res["metrics"] = {n: {"value": measured[n], "unit": u} for n, u in want if n in measured}
+    res["not_measured"] = missing
+    res["extra_metrics"] = {n: v for n, v in measured.items() if n not in names}
 
     res["host"] = dict(shape, local_dir_fs=fs_type(work), jvm_flags=jvm_flags)
     res["provenance"] = {"git_sha": git_sha(), "engine_source_sha256": src_digest}
@@ -153,7 +166,10 @@ def main():
           f"4N={shape['threads_4n']} items/job={res['items_per_job']} {res['item']}")
     for name, m in metrics.items():
         v = m["value"]  # null when every job of a level failed
-        print(f"  {name:<40} {'n/a' if v is None else format(v, '.6g'):>16} {m['unit']}")
+        shown = "n/a" if v is None or name in missing else format(v, ".6g")
+        print(f"  {name:<40} {shown:>16} {m['unit']}{'  (not measured on this workload)' if name in missing else ''}")
+    for name, v in res["extra_metrics"].items():
+        print(f"  {name:<40} {'n/a' if v is None else format(v, '.6g'):>16}   (not in BENCHMARK.json; see README)")
     print(f"  {'error_rate':<40} {res['error_rate']:>16.6g} ratio  "
           f"({res['failed']} failed of {res['attempted']} attempted)")
     for f in res["failures"]:

@@ -3,14 +3,176 @@ package graftbench
 import java.util.SplittableRandom
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.commons.math3.distribution.NormalDistribution
+
 /** Seeded input generator owned by the benchmark. Everything the
  * workloads read is derived from the `--seed` argument here, so the
  * inputs stay fixed when the engine changes. Coordinates are printed
  * with five decimals and parsed back, so the generator's doubles are the
- * exact doubles the engine parses out of the pages. */
+ * exact doubles the engine parses out of the pages.
+ *
+ * Each traffic parameter names its source next to it. A parameter marked
+ * "Assumption" has no published figure behind it; README.md lists them. */
 object Gen {
 
-  /** The hot-cell cluster: a ~0.6° box that ~30% of all points fall in. */
+  // ---- page model (both page workloads) --------------------------------
+
+  /** Mean HTML bytes per page. Common Crawl's monthly crawl announcements
+   * of 2023-2024 give 3.1-3.4 billion captured pages and 400-460 TiB of
+   * uncompressed content per crawl: about 140 KB per capture, HTTP
+   * headers included. */
+  val MeanPageBytes = 140000.0
+  /** Common Crawl truncates a captured payload at 1 MiB. */
+  val MaxPageBytes: Int = 1 << 20
+  /** Standard deviation of ln(page bytes). Assumption: a log-normal with
+   * sigma 1 puts the median at 0.6x the mean (85 KB) and the 1 MiB cap
+   * near the 99th percentile. */
+  val PageSigma = 1.0
+  /** Visible text per HTML byte. Assumption, bounded below by C4: about
+   * 750 GB of cleaned text in 365 M documents (Raffel et al. 2020, Dodge
+   * et al. 2021) is ~2 KB per page, 1.5% of the mean page; raw extraction
+   * before C4's line filters keeps more. */
+  val TextShare = 0.04
+  /** Share of the non-text bytes in inline script and style blocks, which
+   * the extractor skips. Assumption. */
+  val ScriptShare = 0.4
+
+  private val normal = new NormalDistribution(null, 0, 1)
+
+  /** HTML sizes of `n` pages, ascending: the log-normal quantile of each
+   * of `n` equal strata, jittered inside its stratum. Every seed draws the
+   * same size distribution, so the bytes per job barely move with the
+   * seed; only the order and the content do. */
+  def sizeStrata(r: SplittableRandom, n: Int): Array[Int] = {
+    val mu = math.log(MeanPageBytes) - PageSigma * PageSigma / 2
+    Array.tabulate(n) { i =>
+      val p = (i + 0.25 + 0.5 * r.nextDouble()) / n
+      math.min(MaxPageBytes.toDouble, math.exp(mu + PageSigma * normal.inverseCumulativeProbability(p))).toInt
+    }
+  }
+
+  def shuffle[T](r: SplittableRandom, xs: Array[T]): Array[T] = {
+    var i = xs.length - 1
+    while (i > 0) { val j = r.nextInt(i + 1); val t = xs(i); xs(i) = xs(j); xs(j) = t; i -= 1 }
+    xs
+  }
+
+  /** `n` labels in exact proportion to `shares` (largest remainder), each
+   * label's slots spread evenly over [0, n). Dealt onto ascending sizes,
+   * every label gets the same spread of sizes in every seed. */
+  def allot(n: Int, shares: Seq[(String, Double)]): Array[String] = {
+    val raw = shares.map { case (k, x) => k -> x * n / shares.map(_._2).sum }
+    val extra = raw.sortBy { case (_, x) => x.toInt - x }.take(n - raw.map(_._2.toInt).sum).map(_._1).toSet
+    raw.flatMap { case (k, x) =>
+      val c = x.toInt + (if (extra(k)) 1 else 0)
+      (0 until c).map(j => ((j + 0.5) * n / c, k))
+    }.sortBy(_._1).map(_._2).toArray
+  }
+
+  private def coord(v: Double): Double = java.lang.Double.parseDouble(fmt(v))
+  def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.5f", Double.box(v))
+
+  private val Words = Array("river", "market", "station", "harbour", "museum", "bridge",
+    "garden", "tower", "square", "library", "theatre", "castle", "valley", "island",
+    "street", "festival", "archive", "quarter", "avenue", "county", "province", "route",
+    "north", "south", "old", "new", "grand", "little", "upper", "lower", "central")
+
+  private def words(r: SplittableRandom, n: Int, vocab: Array[String], sb: StringBuilder): Unit = {
+    var i = 0
+    while (i < n) {
+      if (i > 0) sb.append(' ')
+      sb.append(vocab(r.nextInt(vocab.length)))
+      i += 1
+    }
+  }
+  private def words(r: SplittableRandom, n: Int, vocab: Array[String]): String = {
+    val sb = new StringBuilder; words(r, n, vocab, sb); sb.toString
+  }
+
+  private val Hex = "0123456789abcdef"
+  private def token(r: SplittableRandom, n: Int, sb: StringBuilder): Unit =
+    (0 until n).foreach(_ => sb.append(Hex.charAt(r.nextInt(16))))
+
+  /** About `bytes` bytes of page chrome: attribute-heavy wrappers, image
+   * and link tags, navigation lists, and (a `ScriptShare` of the bytes)
+   * inline scripts. Its only visible text is one anchor word per link,
+   * drawn from `vocab`. */
+  private def chrome(r: SplittableRandom, bytes: Int, vocab: Array[String], sb: StringBuilder): Unit = {
+    val start = sb.length
+    while (sb.length - start < bytes) {
+      if (r.nextDouble() < ScriptShare) {
+        sb.append("<script>window.__s=window.__s||[];__s.push({id:\"")
+        token(r, 12, sb)
+        sb.append("\",v:").append(r.nextInt(100000)).append("});function f")
+        token(r, 6, sb)
+        sb.append("(a,b){for(var i=0;i<a.length;i++){if(a[i]<b)return i}return -1}</script>")
+      } else r.nextInt(3) match {
+        case 0 =>
+          sb.append("<div class=\"c-")
+          token(r, 6, sb)
+          sb.append(" row\" id=\"n").append(r.nextInt(1 << 20)).append("\" data-track=\"")
+          token(r, 10, sb)
+          sb.append("\"><div class=\"col\"><span class=\"ic\"></span></div></div>")
+        case 1 =>
+          sb.append("<ul class=\"nav\">")
+          (0 until 2 + r.nextInt(5)).foreach { _ =>
+            sb.append("<li class=\"it\"><a class=\"lnk\" href=\"/")
+            token(r, 8, sb)
+            sb.append("/\" title=\"t\"> ").append(vocab(r.nextInt(vocab.length))).append(" </a></li>")
+          }
+          sb.append("</ul>")
+        case _ =>
+          sb.append("<img src=\"/i/")
+          token(r, 16, sb)
+          sb.append(".jpg\" alt=\"\" width=\"").append(r.nextInt(800)).append("\" loading=\"lazy\">")
+            .append("<link rel=\"preload\" href=\"/a/")
+          token(r, 12, sb)
+          sb.append(".css\" as=\"style\">")
+      }
+    }
+  }
+
+  /** Visible text of a page with `bytes` HTML bytes, in words. */
+  private def textWords(bytes: Int): Int = math.max(1, (bytes * TextShare / 7).toInt)
+
+  /** A page: head with a style block, then `paras` paragraphs of body
+   * text with chrome between them, `slots(i)` inserted after paragraph i.
+   * The page comes out close to `bytes` bytes. `vocab` holds the anchor
+   * words. */
+  private def page(r: SplittableRandom, bytes: Int, title: String, head: String,
+      paras: Seq[String], slots: Int => String, vocab: Array[String]): Array[Byte] = {
+    val sb = new StringBuilder(bytes + 4096)
+    sb.append("<!DOCTYPE html><html><head><meta charset=\"utf-8\"><title>").append(title).append("</title>")
+      .append(head)
+      .append("<style>.row{display:flex}.col{flex:1}.nav li{display:inline}.ic{width:16px}</style>")
+      .append("</head><body> ")
+    val visible = paras.map(_.length + 8).sum
+    val gap = math.max(0, bytes - sb.length - visible) / (paras.size + 1)
+    chrome(r, gap, vocab, sb)
+    paras.zipWithIndex.foreach { case (p, i) =>
+      sb.append(" <p>").append(p).append("</p> ").append(slots(i))
+      chrome(r, gap, vocab, sb)
+    }
+    sb.append(" </body></html>")
+    sb.toString.getBytes("UTF-8")
+  }
+
+  /** Paragraphs of about `n` words in total, 30-90 words each. */
+  private def paragraphs(r: SplittableRandom, n: Int, vocab: Array[String]): Seq[String] = {
+    val out = ArrayBuffer[String]()
+    var left = n
+    while (left > 0) {
+      val k = math.min(left, 30 + r.nextInt(61))
+      out += words(r, k, vocab)
+      left -= k
+    }
+    out.toSeq
+  }
+
+  // ---- geo_tiles -------------------------------------------------------
+
+  /** The hot-cell cluster: a ~0.6 degree box that 30% of all points fall
+   * in (the skew FIXTURES.md designs into the repo's page fixtures). */
   val HotLat = 48.85
   val HotLon = 2.35
   val HotHalf = 0.3
@@ -21,9 +183,6 @@ object Gen {
   final case class Point(id: Long, lat: Double, lon: Double)
   final case class Doc(id: Long, url: String, source: String, html: Array[Byte], kind: String)
 
-  private def coord(v: Double): Double = java.lang.Double.parseDouble(fmt(v))
-  def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.5f", Double.box(v))
-
   /** A point that is hot with probability `hotShare`, else uniform over
    * lat [-60, 70] x lon [-180, 180]. */
   def latLon(r: SplittableRandom, hotShare: Double): (Double, Double) =
@@ -32,56 +191,20 @@ object Gen {
         coord(HotLon + (r.nextDouble() * 2 - 1) * HotHalf))
     else (coord(-60 + r.nextDouble() * 130), coord(-180 + r.nextDouble() * 360))
 
-  private val Words = Array("river", "market", "station", "harbour", "museum", "bridge",
-    "garden", "tower", "square", "library", "theatre", "castle", "valley", "island",
-    "street", "festival", "archive", "quarter", "avenue", "county", "province", "route",
-    "north", "south", "old", "new", "grand", "little", "upper", "lower", "central")
-
-  private def words(r: SplittableRandom, n: Int, vocab: Array[String]): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < n) {
-      if (i > 0) sb.append(' ')
-      sb.append(vocab(r.nextInt(vocab.length)))
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** Filler markup of roughly `bytes` bytes: nested sections, lists,
-   * links, an entity reference and a script block the extractor skips. */
-  private def filler(r: SplittableRandom, bytes: Int, vocab: Array[String], sb: StringBuilder): Unit = {
-    val start = sb.length
-    while (sb.length - start < bytes) {
-      r.nextInt(5) match {
-        case 0 => sb.append("<div class=\"s\"><div><p>").append(words(r, 12 + r.nextInt(30), vocab))
-          .append(" &amp; ").append(words(r, 5, vocab)).append("</p></div></div>\n")
-        case 1 => sb.append("<ul>")
-          (0 until 2 + r.nextInt(5)).foreach { i =>
-            sb.append("<li><a href=\"/p/").append(i).append("\">").append(words(r, 3, vocab))
-              .append("</a></li>")
-          }
-          sb.append("</ul>\n")
-        case 2 => sb.append("<h2>").append(words(r, 4, vocab)).append("</h2>\n")
-        case 3 => sb.append("<script>var x = \"").append(words(r, 4, vocab)).append("\";</script>\n")
-        case _ => sb.append("<p>").append(words(r, 20 + r.nextInt(40), vocab)).append("</p>\n")
-      }
-    }
-  }
-
-  // ---- geo_tiles -------------------------------------------------------
-
   private val Sources = Array("meta", "uri", "microdata")
 
-  /** Page size mix (bytes of filler): half small, a third medium, the
-   * rest large. Entity count mix: 0, 1, 2, 3 or 6 per page. */
+  /** Geo entities per page: 0, 1, 2, 3 or 6 with shares 15/35/25/15/10%,
+   * in exact proportion (see [[allot]]). Assumption: the workload models
+   * pages a geo crawl selected, so most carry coordinates; on an
+   * unselected crawl most pages carry none. */
+  private val EntityShares = Seq("0" -> 0.15, "1" -> 0.35, "2" -> 0.25, "3" -> 0.15, "6" -> 0.10)
+
   def geoPages(seed: Long, n: Int, hotShare: Double): Seq[Page] = {
     val r = new SplittableRandom(seed * 31 + 1)
+    val sizes = shuffle(r, sizeStrata(r, n))
+    val counts = shuffle(r, allot(n, EntityShares))
     (0 until n).map { i =>
-      val size = { val u = r.nextDouble(); if (u < 0.5) 1200 else if (u < 0.85) 5000 else 20000 }
-      val nEnt = { val u = r.nextDouble()
-        if (u < 0.15) 0 else if (u < 0.5) 1 else if (u < 0.75) 2 else if (u < 0.9) 3 else 6 }
-      val raw = (0 until nEnt).map { _ =>
+      val raw = (0 until counts(i).toInt).map { _ =>
         val src = Sources(r.nextInt(3))
         val (la, lo) = latLon(r, hotShare)
         (src, la, lo)
@@ -89,28 +212,20 @@ object Gen {
       // the extractor emits meta, then uri, then microdata entities
       val ordered = Seq("meta", "uri", "microdata").flatMap(s => raw.filter(_._1 == s))
       val ents = ordered.zipWithIndex.map { case ((s, la, lo), k) => Entity(k, s, la, lo) }
-      val sb = new StringBuilder
-      sb.append("<!DOCTYPE html>\n<html><head><title>").append(words(r, 4, Words)).append("</title>")
-      ents.filter(_.source == "meta").foreach { e =>
-        sb.append("<meta name=\"geo.position\" content=\"").append(fmt(e.lat)).append(';')
-          .append(fmt(e.lon)).append("\">")
+      val head = ents.filter(_.source == "meta").map { e =>
+        s"""<meta name="geo.position" content="${fmt(e.lat)};${fmt(e.lon)}">"""
+      }.mkString
+      val body = ents.filter(_.source != "meta").map { e =>
+        if (e.source == "uri") s"""<p>see <a href="geo:${fmt(e.lat)},${fmt(e.lon)}">the map</a></p> """
+        else s"""<div itemscope><span itemprop="latitude">${fmt(e.lat)}</span> """ +
+          s"""<span itemprop="longitude">${fmt(e.lon)}</span></div> """
       }
-      sb.append("</head><body>\n")
-      val parts = ents.filter(_.source != "meta")
-      val chunk = size / (parts.size + 1)
-      filler(r, chunk, Words, sb)
-      parts.foreach { e =>
-        if (e.source == "uri")
-          sb.append("<p>see <a href=\"geo:").append(fmt(e.lat)).append(',').append(fmt(e.lon))
-            .append("\">the map</a></p>\n")
-        else
-          sb.append("<div itemscope><span itemprop=\"latitude\">").append(fmt(e.lat))
-            .append("</span> <span itemprop=\"longitude\">").append(fmt(e.lon)).append("</span></div>\n")
-        filler(r, chunk, Words, sb)
-      }
-      sb.append("</body></html>\n")
-      Page(i.toLong, s"https://site${i % 97}.example/geo/$i",
-        sb.toString.getBytes("UTF-8"), ents)
+      val paras = paragraphs(r, textWords(sizes(i)), Words)
+      // entities go after evenly spaced paragraphs
+      val at = body.indices.map(k => (k + 1) * paras.size / (body.size + 1)).zip(body)
+        .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).mkString }
+      val html = page(r, sizes(i), words(r, 4, Words), head, paras, p => at.getOrElse(p, ""), Words)
+      Page(i.toLong, s"https://site${i % 97}.example/geo/$i", html, ents)
     }
   }
 
@@ -170,8 +285,15 @@ object Gen {
 
   // ---- curate_snapshot -------------------------------------------------
 
-  /** Stopword-bearing vocabularies per language (the stopwords are the
-   * ones the engine's language scorer counts). */
+  /** Syllable words that are none of the engine's scored stopwords: the
+   * text of the languages the scorer does not know. */
+  private val OtherVocab: Array[String] = {
+    val syl = for (c <- "bkmrstvz"; v <- "aeiou") yield s"$c$v"
+    (for (a <- syl; b <- syl.take(12)) yield a + b).toArray
+  }
+
+  /** Vocabularies per language; the first eight words of each are the
+   * stopwords the engine's language scorer counts. */
   private val LangVocab: Map[String, Array[String]] = Map(
     "en" -> (Array("the", "a", "of", "and", "to", "in", "is", "it") ++ Words),
     "de" -> (Array("der", "die", "das", "und", "ist", "ein", "zu", "den") ++
@@ -179,7 +301,38 @@ object Gen {
     "fr" -> (Array("le", "la", "les", "et", "est", "un", "une", "des") ++
       Array("rue", "pont", "tour", "jardin", "marche", "ville", "place", "musee")),
     "es" -> (Array("el", "la", "los", "y", "es", "un", "una", "de") ++
-      Array("calle", "puente", "torre", "jardin", "mercado", "ciudad", "plaza", "museo")))
+      Array("calle", "puente", "torre", "jardin", "mercado", "ciudad", "plaza", "museo")),
+    "other" -> OtherVocab)
+
+  private val ContentVocab: Map[String, Array[String]] =
+    LangVocab.map { case (l, v) => l -> (if (l == "other") v else v.drop(8)) }
+
+  /** Primary-language shares. Common Crawl's published per-crawl language
+   * statistics (CLD2, 2023-2024 crawls) put English near 45%, German near
+   * 6% and French and Spanish near 4.5% each; the rest is languages the
+   * engine's scorer does not know. */
+  val LangShares: Seq[(String, Double)] =
+    Seq("en" -> 0.45, "de" -> 0.06, "fr" -> 0.045, "es" -> 0.045, "other" -> 0.40)
+
+  /** Shares of pages generated as copies of an earlier original page.
+   * Fetterly, Manasse and Najork, "On the evolution of clusters of
+   * near-duplicate web pages" (LA-WEB 2003), report 29.2% of 150 M crawled
+   * pages as very similar to another page and 22.2% as virtually
+   * identical: 22% exact copies, and the 7% between as near copies (one
+   * paragraph edited). */
+  val ExactDupShare = 0.22
+  val NearDupShare = 0.07
+  /** Assumption: pages that quote a benchmark passage. No per-page web
+   * rate is published; 2% gives the decontamination stage work. */
+  val ContaminatedShare = 0.02
+  /** Assumption: pages of chrome with almost no text (below the quality
+   * screen's token floor). */
+  val ShortShare = 0.06
+  /** Hosts: Zipf(1) over 24 hosts. Assumption: pages per host are heavy
+   * tailed on the web; the largest host carries ~26% of the pages, so the
+   * per-source cap has work. */
+  val Hosts = 24
+  private val HostShares = (1 to Hosts).map(h => s"src${h - 1}.example" -> 1.0 / h)
 
   /** Benchmark passages (the decontamination set). */
   def benchmarkPassages(seed: Long, n: Int): Seq[String] = {
@@ -187,54 +340,53 @@ object Gen {
     (0 until n).map(i => s"question $i " + words(r, 24, Words))
   }
 
-  /** Curation corpus. Shares: 8% exact duplicates of an earlier doc, 8%
-   * near-duplicates (one paragraph changed), 4% contain a benchmark
-   * passage, 6% too short to pass the quality screen; language mix en
-   * 55%, de 20%, fr 15%, es 10%; 24 sources. `kind` records what each
-   * doc was generated as. */
+  /** Curation corpus. `kind` records what each doc was generated as.
+   * Every kind and host count is exact (see [[allot]]), so the number of
+   * documents that reach each curation stage does not move with the seed.
+   * Contaminated and near-empty pages are English; a near-empty page has
+   * four words of text, one of them a stopword, so it passes the language
+   * screen and fails the quality screen. */
   def curationDocs(seed: Long, n: Int, bench: Seq[String]): Seq[Doc] = {
     val r = new SplittableRandom(seed * 31 + 4)
-    val out = new ArrayBuffer[Doc](n)
-    // duplicates copy only original documents: every duplicate group is a
-    // star, so the near-dup connected-component rounds do not depend on
-    // the seed through chains of copies of copies
-    val originals = new ArrayBuffer[Int](n)
-    var i = 0
-    while (i < n) {
-      val u = r.nextDouble()
-      val src = s"src${r.nextInt(24)}.example"
-      val url = s"https://$src/d/$i"
-      val (html, kind) =
-        if (i > 20 && u < 0.08) (out(originals(r.nextInt(originals.size))).html, "exact_dup")
-        else if (i > 20 && u < 0.16) {
-          val base = new String(out(originals(r.nextInt(originals.size))).html, "UTF-8")
-          val cut = base.indexOf("</p>")
-          val edited =
-            if (cut < 0) base
-            else base.substring(0, cut) + " " + words(r, 3, Words) + base.substring(cut)
-          (edited.getBytes("UTF-8"), "near_dup")
-        } else {
-          val lang = { val v = r.nextDouble()
-            if (v < 0.55) "en" else if (v < 0.75) "de" else if (v < 0.9) "fr" else "es" }
-          val vocab = LangVocab(lang)
-          val short = u > 0.16 && u < 0.22
-          val contaminated = u >= 0.22 && u < 0.26
-          val sb = new StringBuilder
-          sb.append("<html><head><title>").append(words(r, 3, vocab)).append("</title></head><body>\n")
-          val paras = if (short) 1 else 3 + r.nextInt(10)
-          (0 until paras).foreach { p =>
-            sb.append("<p>").append(words(r, if (short) 4 else 30 + r.nextInt(60), vocab)).append("</p>\n")
-            if (contaminated && p == 1) sb.append("<p>").append(bench(r.nextInt(bench.size))).append("</p>\n")
-            if (p % 3 == 2) sb.append("<div><a href=\"/x\">").append(words(r, 2, vocab)).append("</a></div>\n")
-          }
-          sb.append("</body></html>\n")
-          (sb.toString.getBytes("UTF-8"),
-            if (short) "short" else if (contaminated) "contaminated" else lang)
-        }
-      if (kind != "exact_dup" && kind != "near_dup") originals += i
-      out += Doc(i.toLong, url, src, html, kind)
-      i += 1
+    val plain = 1 - ExactDupShare - NearDupShare - ContaminatedShare - ShortShare
+    val kinds = allot(n, Seq("exact_dup" -> ExactDupShare, "near_dup" -> NearDupShare,
+      "contaminated" -> ContaminatedShare, "short" -> ShortShare) ++
+      LangShares.map { case (l, x) => l -> x * plain })
+    val sizes = sizeStrata(r, n)
+    val html = new Array[Array[Byte]](n)
+    kinds.indices.filter(i => kinds(i) != "exact_dup" && kinds(i) != "near_dup").foreach { i =>
+      val kind = kinds(i)
+      val lang = if (kind == "short" || kind == "contaminated") "en" else kind
+      val vocab = LangVocab(lang)
+      val paras =
+        if (kind == "short") Seq("the " + words(r, 3, ContentVocab("en")))
+        else paragraphs(r, textWords(sizes(i)), vocab)
+      val slots: Int => String = p =>
+        if (kind == "contaminated" && p == 0) s"<p>${bench(r.nextInt(bench.size))}</p> " else ""
+      // anchors carry content words only, so a page with almost no body
+      // text fails the quality screen's stopword share
+      html(i) = page(r, sizes(i), words(r, 3, vocab), "", paras, slots, ContentVocab(lang))
     }
-    out.toSeq
+    // copies are made of kept-language originals only, the one closest in
+    // size: every duplicate group is a star, so the near-dup
+    // connected-component rounds do not depend on the seed through chains
+    // of copies of copies
+    val originals = kinds.indices.filter(i => Set("en", "de", "fr")(kinds(i)))
+    kinds.indices.filter(i => kinds(i) == "exact_dup" || kinds(i) == "near_dup").foreach { i =>
+      val base = html(originals.minBy(o => math.abs(sizes(o) - sizes(i))))
+      html(i) =
+        if (kinds(i) == "exact_dup") base
+        else {
+          val s = new String(base, "UTF-8")
+          val cut = s.indexOf("</p>")
+          (s.substring(0, cut) + " " + words(r, 3, Words) + s.substring(cut)).getBytes("UTF-8")
+        }
+    }
+    val order = shuffle(r, kinds.indices.toArray)
+    val hosts = shuffle(r, allot(n, HostShares))
+    order.indices.map { id =>
+      val i = order(id)
+      Doc(id.toLong, s"https://${hosts(id)}/d/$id", hosts(id), html(i), kinds(i))
+    }
   }
 }

@@ -25,9 +25,14 @@ object Kernels {
     (s, (tmx.getCurrentThreadAllocatedBytes - a0).toDouble / n)
   }
 
-  def html(docs: Seq[Array[Byte]], minS: Double): Map[String, Double] = {
-    val mb = docs.map(_.length.toLong).sum / 1048576.0
-    val kb = docs.map(_.length.toLong).sum / 1024.0
+  /** HTML kernels over every `every`-th page of `all`. `parse.corpus_s`
+   * scales the workload's own parse call (`geo`: geo entities, `text`:
+   * text extraction) from the sample to one thread over all pages. */
+  def html(all: Seq[Array[Byte]], every: Int, call: String, minS: Double): Map[String, Double] = {
+    val docs = all.indices.collect { case i if i % every == 0 => all(i) }
+    val bytes = docs.map(_.length.toLong).sum
+    val mb = bytes / 1048576.0
+    val kb = bytes / 1024.0
     val (uS, uA) = measure(minS)(docs.map(d => Utf8.decodeReplace(d).length.toLong).sum)
     val (pS, pA) = measure(minS)(docs.map(d => HtmlParser.parse(d).nodes.length.toLong).sum)
     val nodes = docs.map(d => HtmlParser.parse(d).nodes.length.toLong).sum.toDouble / docs.size
@@ -40,7 +45,8 @@ object Kernels {
       "parse.html_alloc_b_per_doc" -> pA / docs.size,
       "parse.nodes_per_doc" -> nodes,
       "parse.extract_text_mb_per_s" -> mb / tS,
-      "parse.geo_docs_per_s" -> docs.size / gS)
+      "parse.geo_docs_per_s" -> docs.size / gS,
+      "parse.corpus_s" -> (if (call == "geo") gS else tS) * all.map(_.length.toLong).sum / bytes)
   }
 
   /** Points are (lat, lon); each PIP test pairs point i with ring i mod R. */

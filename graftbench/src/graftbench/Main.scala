@@ -7,51 +7,15 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
 
-/** One benchmark run in one JVM. Untraced (`--trace 0`): a session at N
- * threads, then one at 4N, each built and fed freshly written inputs,
- * an untimed check job, then timed fused jobs. Traced (`--trace 1`): one
+/** One benchmark run in one JVM. Untraced (`--trace 0`): four legs at
+ * 4N, N, 4N and N threads, each a session built and fed freshly written
+ * inputs; an untimed check job in the first leg, untimed warm-up jobs,
+ * then timed fused jobs. Traced (`--trace 1`): one
  * 4N session; kernels, untraced and traced fused jobs, and the
- * per-operator split run. Prints one `GRAFTBENCH_RESULT {json}` line. */
+ * per-operator split run. Prints one `GRAFTBENCH_RESULT {json}` line
+ * with the metrics it measured; `run.py` matches them against
+ * BENCHMARK.json, which holds the names and units. */
 object Main {
-
-  val EndToEnd: Seq[(String, String)] = Seq(
-    "items_per_s" -> "1/s", "items_per_s_n" -> "1/s", "scaling_eff" -> "ratio",
-    "setup_s" -> "s", "live_heap_mb" -> "MB", "stored_bytes_per_input_byte" -> "ratio")
-
-  val OpNames = Seq("extract_geo", "cell_id", "spatial_join", "raster", "sql_pip_join",
-    "knn_k1", "knn_k3", "knn_k8", "extract_text", "curate", "resumable_run")
-  val Layers = Seq("functions", "operators", "plans", "api", "snap", "harness")
-  val CurateStages = Seq("lang", "quality", "exact_dup", "near_dup", "contaminated", "capped")
-
-  val PerLayer: Seq[(String, String)] = Seq(
-    "core.utf8_mb_per_s" -> "MB/s", "core.utf8_alloc_b_per_kb" -> "B/KB",
-    "parse.html_mb_per_s" -> "MB/s", "parse.html_alloc_b_per_doc" -> "B",
-    "parse.nodes_per_doc" -> "count", "parse.extract_text_mb_per_s" -> "MB/s",
-    "parse.geo_docs_per_s" -> "1/s",
-    "geo.cell_id_m_per_s" -> "M/s", "geo.pip_m_per_s" -> "M/s", "geo.pip_indexed_m_per_s" -> "M/s",
-    "geo.cover_cells_per_polygon" -> "count", "geo.disk_band_cells_per_s" -> "1/s",
-    "functions.fallback_exprs" -> "count", "functions.wscg_stages" -> "count",
-    "functions.jit_too_long" -> "count",
-    "plans.plan_s" -> "s", "plans.rule_rewrites" -> "count", "plans.exchanges" -> "count",
-    "plans.nested_loop_joins" -> "count") ++
-    OpNames.map(o => s"operators.$o.s" -> "s") ++ Seq(
-    "operators.spatial_join.candidates" -> "count", "operators.spatial_join.hits" -> "count",
-    "operators.spatial_join.hit_ratio" -> "ratio",
-    "operators.knn.jobs_per_call" -> "count", "operators.knn.candidates_per_query" -> "count",
-    "operators.dedup.verify_ratio" -> "ratio") ++
-    CurateStages.map(s => s"operators.curate.drops.$s" -> "count") ++ Seq(
-    "operators.curate.kept" -> "count",
-    "snap.wave_commit_p50_ms" -> "ms", "snap.wave_commit_max_ms" -> "ms",
-    "snap.files_written" -> "count", "snap.bytes_written" -> "B", "snap.compact_s" -> "s",
-    "snap.bytes_rewritten" -> "B", "snap.waves_rerun" -> "count",
-    "spark.jobs" -> "count", "spark.stages" -> "count", "spark.task_s" -> "s",
-    "spark.busy_frac" -> "ratio", "spark.gc_s" -> "s", "spark.shuffle_write_mb" -> "MB",
-    "spark.spill_mb" -> "MB", "spark.single_task_stages" -> "count",
-    "spark.scan_tasks" -> "count", "spark.rdd_blocks_left" -> "count",
-    "spark.scratch_dirs_left" -> "count",
-    "trace.items_per_s_untraced" -> "1/s", "trace.items_per_s_traced" -> "1/s",
-    "trace.overhead_frac" -> "ratio", "trace.fused_job_s" -> "s", "trace.op_span_sum_s" -> "s") ++
-    Layers.map(l => s"trace.self.${l}_s" -> "s")
 
   final case class Args(workload: String, seed: Long, seconds: Double, trace: Boolean,
       work: Path, spawnMs: Long, lo: Int, hi: Int)
@@ -99,9 +63,7 @@ object Main {
     mem.gc(); Thread.sleep(50); mem.gc()
     val blocks = spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions.toLong).sum
     val local = work.resolve("spark-local")
-    val scratch =
-      if (!Files.exists(local)) 0L
-      else { val s = Files.walk(local); try s.filter(p => p.getFileName.toString.startsWith("graft-scratch")).count() finally s.close() }
+    val scratch = Util.tree(local).count(_.getFileName.toString.startsWith("graft-scratch")).toLong
     Leftover(mem.getHeapMemoryUsage.getUsed / 1048576.0, blocks, scratch)
   }
 
@@ -127,12 +89,15 @@ object Main {
         None
       }
     }
-    def checked(spark: SparkSession, dir: Path, k: Int, first: Boolean): Unit =
+    def checked(spark: SparkSession, dir: Path, k: Int, first: Boolean): Unit = {
+      val t0 = System.nanoTime()
       attempt(s"check@$k")(w.check(spark, dir, first)).foreach { c =>
         if (c.failures.nonEmpty) { failed += 1; failures ++= c.failures.map(f => s"check@$k: $f") }
         digests += k -> c.digest
         detail ++= c.extra
       }
+      detail(s"check_s_$k") = (System.nanoTime() - t0) / 1e9
+    }
     /** Timed fused jobs until `budgetS` is spent (at least `minJobs`);
      * every job's output digest joins the leg digests. */
     def timed(spark: SparkSession, dir: Path, k: Int, budgetS: Double, minJobs: Int)
@@ -171,17 +136,19 @@ object Main {
     }
 
     if (!a.trace) {
-      // each session runs untimed warm-up jobs before its timed ones: the
-      // first job in a new session pays a one-off penalty, and the JIT is
-      // still compiling the pipeline's driver-side code
-      val plan = Seq((a.lo, "n", 0.55, w.minJobs._1), (a.hi, "4n", 0.45, w.minJobs._2))
-      val ips = scala.collection.mutable.Map[String, Seq[Double]]()
-      plan.foreach { case (k, tag, share, minJobs) =>
-        val warm = if (tag == "n") w.warmJobs._1 else w.warmJobs._2
-        val (spark, dir) = leg(k, tag)
-        if (tag == "n") checked(spark, dir, k, first = true)
-        timed(spark, dir, k, 0, warm)(w.job(spark, dir))
-        ips(tag) = timed(spark, dir, k, share * a.seconds, minJobs)(w.job(spark, dir))
+      // The levels alternate 4N, N, 4N, N, one session per leg, so a slow
+      // drift of the host's speed lands on both levels alike. Each session
+      // runs untimed warm-up jobs before its timed ones: the first job in a
+      // new session pays a one-off penalty. The first leg is at 4N, where
+      // the check job and the JIT's warm-up cost the least wall time.
+      val plan = Seq((a.hi, "4n", 0.45), (a.lo, "n", 0.55), (a.hi, "4n", 0.45), (a.lo, "n", 0.55))
+      val ips = scala.collection.mutable.Map[String, Seq[Double]]().withDefaultValue(Nil)
+      plan.zipWithIndex.foreach { case ((k, tag, share), i) =>
+        val (spark, dir) = leg(k, s"$tag$i")
+        // the first leg's check job adds to its warm-up
+        if (i == 0) checked(spark, dir, k, first = true)
+        timed(spark, dir, k, 0, if (i == 0) w.firstWarmJobs else w.warmJobs)(w.job(spark, dir))
+        ips(tag) ++= timed(spark, dir, k, share * a.seconds / 2, w.minJobs)(w.job(spark, dir))
         close(spark, dir)
       }
       val hiIps = ips("4n"); val loIps = ips("n")
@@ -189,7 +156,9 @@ object Main {
       metrics("items_per_s") = Util.med(hiIps)
       metrics("items_per_s_n") = Util.med(loIps)
       metrics("scaling_eff") = metrics("items_per_s") / (ratio * metrics("items_per_s_n"))
-      metrics("setup_s") = bootS + Util.med(setups.toSeq)
+      // the JVM's own start (detail jvm_boot_s) moved 0.3-0.7 s between
+      // runs, more than a whole warm set-up, so it stays out of setup_s
+      metrics("setup_s") = Util.med(setups.toSeq)
       metrics("live_heap_mb") = leftovers.map(_.heapMb).max
       metrics("stored_bytes_per_input_byte") = Util.med(jobExtras.map(_("stored_bytes_per_input_byte")).toSeq)
       detail ++= Map("items_per_s_samples_4n" -> hiIps, "items_per_s_samples_n" -> loIps,
@@ -250,16 +219,19 @@ object Main {
       val opS = w.ops.map(o => o -> splitSpans.filter(_.name == o).map(_.seconds).sum).toMap
       val fused = 1.0 * w.items / Util.med(untraced.toSeq)
       val self = tracer.selfByLayer(1000).toMap
-      metrics ++= kern
+      metrics ++= kern - "parse.corpus_s"
+      // one-thread parse seconds over all pages per thread-second of the job
+      // (workloads without pages have no parse kernel)
+      kern.get("parse.corpus_s").foreach(c => metrics("parse.job_share") = c / (fused * a.hi))
       perJob.headOption.foreach(_.keys.foreach(k => metrics(k) = Util.med(perJob.map(_(k)).toSeq)))
       metrics ++= opMetrics
-      OpNames.foreach(o => metrics(s"operators.$o.s") = opS.getOrElse(o, 0.0))
+      w.ops.foreach(o => metrics(s"operators.$o.s") = opS(o))
       metrics("trace.items_per_s_untraced") = Util.med(untraced.toSeq)
       metrics("trace.items_per_s_traced") = Util.med(traced.toSeq)
       metrics("trace.overhead_frac") = 1 - metrics("trace.items_per_s_traced") / metrics("trace.items_per_s_untraced")
       metrics("trace.fused_job_s") = fused
       metrics("trace.op_span_sum_s") = opS.values.sum
-      Layers.foreach(l => metrics(s"trace.self.${l}_s") = self.getOrElse(l, 0.0))
+      self.foreach { case (l, s) => metrics(s"trace.self.${l}_s") = s }
       detail("spans") = tracer.spans.map(s => Map("id" -> s.id, "name" -> s.name, "layer" -> s.layer,
         "job" -> s.job, "parent" -> s.parent, "start_ns" -> s.startNs, "end_ns" -> s.endNs))
       println(f"per-layer self time, ${w.name} split run (fused untraced job: $fused%.3f s, " +
@@ -274,14 +246,12 @@ object Main {
       failed += 1; attempted += 1
       failures += s"output digests differ between jobs or parallelism levels: ${digests.mkString(", ")}"
     }
-    val wanted = if (a.trace) PerLayer else EndToEnd
-    wanted.foreach { case (m, _) => if (!metrics.contains(m)) metrics(m) = 0.0 }
     val out = Map(
       "workload" -> w.name, "seed" -> a.seed, "trace" -> a.trace, "seconds" -> a.seconds,
       "threads_n" -> a.lo, "threads_4n" -> a.hi, "item" -> w.itemName, "items_per_job" -> w.items,
       "attempted" -> attempted, "failed" -> failed, "error_rate" -> failed.toDouble / math.max(1, attempted),
       "failures" -> failures.toSeq,
-      "metrics" -> wanted.map { case (m, u) => m -> Map("value" -> metrics(m), "unit" -> u) }.toMap,
+      "metrics" -> metrics,
       "input" -> w.info, "detail" -> detail,
       "leftovers" -> leftovers.map(l => Seq(l.heapMb, l.rddBlocks.toDouble, l.scratchDirs.toDouble)),
       "digests" -> digests.map { case (k, d) => s"$k:$d" },

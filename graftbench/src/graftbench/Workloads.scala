@@ -3,8 +3,6 @@ package graftbench
 import java.nio.file.{Files, Path}
 import java.security.MessageDigest
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,18 +59,26 @@ object Util {
   def md5hex(b: Array[Byte]): String =
     MessageDigest.getInstance("MD5").digest(b).map(x => f"${x & 0xff}%02x").mkString
 
-  def files(p: Path): Seq[Path] =
-    if (!Files.exists(p)) Nil
-    else { val s = Files.walk(p); try s.iterator.asScala.filter(Files.isRegularFile(_)).toList finally s.close() }
+  /** Every path under `p` (itself included), parents before children.
+   * Unlike `Files.walk` it skips an entry that vanishes while it lists:
+   * Spark's cleaner deletes under spark.local.dir at any time. */
+  def tree(p: Path): Seq[Path] = {
+    val out = scala.collection.mutable.ArrayBuffer[Path]()
+    def go(f: java.io.File): Unit = {
+      out += f.toPath
+      Option(f.listFiles()).foreach(_.foreach(go))
+    }
+    val root = p.toFile
+    if (root.exists()) go(root)
+    out.toSeq
+  }
+
+  def files(p: Path): Seq[Path] = tree(p).filter(Files.isRegularFile(_))
 
   def bytes(p: Path): Long = files(p).map(Files.size).sum
   def parquetFiles(p: Path): Seq[Path] = files(p).filter(_.getFileName.toString.endsWith(".parquet"))
 
-  def deleteTree(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.iterator.asScala.toList.reverse.foreach(Files.deleteIfExists) finally s.close()
-    }
+  def deleteTree(p: Path): Unit = tree(p).reverse.foreach(Files.deleteIfExists)
 
   /** Row groups per parquet file, read from the footers. */
   def rowGroups(spark: SparkSession, p: Path): Seq[Int] = {
@@ -125,10 +131,15 @@ abstract class Workload {
   def kernels(minS: Double): Map[String, Double]
   /** Operator span names this workload reports (operators.<op>.s). */
   def ops: Seq[String]
-  /** Least timed jobs at (N, 4N) threads, however long they take. */
-  def minJobs: (Int, Int) = (2, 2)
-  /** Untimed warm-up jobs at the start of each session (N, 4N). */
-  def warmJobs: (Int, Int) = (0, 0)
+  /** Least timed jobs per leg, however long they take. */
+  def minJobs: Int = 1
+  /** Untimed warm-up jobs at the start of each leg's session, and in the
+   * first leg, after the check job. */
+  def warmJobs: Int = 0
+  def firstWarmJobs: Int = 0
+  /** Pages the single-thread kernels run over: every 10th page, a
+   * sample that keeps the size mix. */
+  protected val KernelSample = 10
 
   protected def in(dir: Path, t: String): String = dir.resolve("in").resolve(t).toString
 
@@ -148,7 +159,9 @@ abstract class Workload {
 final class GeoTiles(seed: Long) extends Workload {
   val name = "geo_tiles"
   val itemName = "pages"
-  val NPages = 3000
+  /** Sized so a job at N threads takes about two seconds, most of it
+   * parsing (see parse.job_share in README.md); 16 pages per file. */
+  val NPages = 384
   val NFiles = 24
   val NPolys = 48
   val HotShare = 0.3
@@ -165,13 +178,27 @@ final class GeoTiles(seed: Long) extends Workload {
     "html_bytes" -> pages.map(_.html.length.toLong).sum,
     "page_bytes_p50" -> med(pages.map(_.html.length.toDouble)),
     "page_bytes_max" -> pages.map(_.html.length).max,
+    "text_share" -> Gen.TextShare, "script_share" -> Gen.ScriptShare,
     "entities" -> pages.map(_.entities.size).sum,
     "hot_share" -> HotShare, "polygons" -> NPolys, "polygon_edges" -> "4-8",
     "join_res" -> JoinRes, "cell_res" -> CellRes, "zoom" -> Zoom)
 
+  /** Pages in the order that makes Store's round-robin deal give every
+   * file nearly the same bytes: largest first, dealt in snake order. With
+   * a plain deal the largest file, and so the slowest scan task, moved
+   * with the seed. */
+  private lazy val balanced: IndexedSeq[Gen.Page] = {
+    val out = new Array[Gen.Page](NPages)
+    pages.sortBy(p => (-p.html.length, p.id)).zipWithIndex.foreach { case (p, t) =>
+      val round = t / NFiles; val pos = t % NFiles
+      out(round * NFiles + (if (round % 2 == 0) pos else NFiles - 1 - pos)) = p
+    }
+    out.toIndexedSeq
+  }
+
   def write(spark: SparkSession, dir: Path): Unit = {
     Store.write(dir.resolve("in/pages"), "message pages { required int64 page_id; " +
-        "required binary url (STRING); required binary html; }", NFiles, pages.toIndexedSeq) { (g, p) =>
+        "required binary url (STRING); required binary html; }", NFiles, balanced) { (g, p) =>
       g.append("page_id", p.id).append("url", p.url).append("html", Store.bin(p.html))
     }
     Store.write(dir.resolve("in/polygons"), s"message polygons { required int64 polygon_id; ${Store.Ring} }",
@@ -247,14 +274,16 @@ final class GeoTiles(seed: Long) extends Workload {
   }
 
   def kernels(minS: Double): Map[String, Double] = {
-    val docs = pages.take(400).map(_.html)
     val pts = pages.flatMap(_.entities).map(e => (e.lat, e.lon)).toArray
-    Kernels.html(docs, minS) ++ Kernels.geo(pts, polys.map(_.ring), JoinRes, 16, minS)
+    Kernels.html(pages.map(_.html), KernelSample, "geo", minS) ++
+      Kernels.geo(pts, polys.map(_.ring), JoinRes, 16, minS)
   }
 
   val ops = Seq("extract_geo", "cell_id", "spatial_join", "raster")
-  /** Cheap jobs: the JIT settles after about five. */
-  override val warmJobs = (3, 2)
+  /** One warm-up job per session; the JIT is still speeding up the first
+   * leg's jobs after the check job, so that leg runs three. */
+  override val warmJobs = 1
+  override val firstWarmJobs = 3
 }
 
 // ---------------------------------------------------------------------------
@@ -378,9 +407,8 @@ final class JoinKnn(seed: Long) extends Workload {
     Kernels.geo(pts.map(q => (q.lat, q.lon)).toArray, polys.map(_.ring), 7, 16, minS)
 
   val ops = Seq("sql_pip_join") ++ Ks.map(k => s"knn_k$k")
-  /** A new session's first job runs ~20% slow here; the median of three
-   * at 4N leaves it out. */
-  override val minJobs = (2, 3)
+  /** A new session's first job runs ~20% slow here. */
+  override val warmJobs = 1
 }
 
 // ---------------------------------------------------------------------------
@@ -390,14 +418,24 @@ final class JoinKnn(seed: Long) extends Workload {
 final class CurateSnapshot(seed: Long) extends Workload {
   val name = "curate_snapshot"
   val itemName = "pages"
-  val NDocs = 150
+  /** Sized so the near-dup stage's candidate pairs fit: with 4 x 4 bands
+   * almost every pair of surviving documents is a candidate (see
+   * README.md, found defect), and the pairs grow with the square of the
+   * corpus. */
+  val NDocs = 120
   val NBench = 40
   val Waves = 4
-  /** 8 minhashes: the engine splits one md5 into 32 / (bands x rows) hex
-   * digits per hash, so 4 x 2 keeps 16-bit hashes (4 x 8 would leave one
-   * hex digit per hash and make every document a candidate pair). */
+  /** The largest host keeps about ten documents up to this stage, so the
+   * cap drops a few or none. A tighter cap drops more documents, and
+   * which ones moves stored_bytes_per_input_byte from seed to seed. */
+  val CapPerSource = 10
+  /** 16 minhashes in 4 bands of 4, a usual LSH setting. The engine cuts
+   * one md5 into 32 / 16 = 2 hex digits per minhash, whose minimum over a
+   * page's shingles is almost always "00": nearly every pair becomes a
+   * candidate. The workload keeps this setting so that a fix shows in
+   * items_per_s and operators.dedup.verify_ratio. */
   val Bands = 4
-  val RowsPerBand = 2
+  val RowsPerBand = 4
 
   lazy val bench: Seq[String] = Gen.benchmarkPassages(seed, NBench)
   lazy val docs: Seq[Gen.Doc] = Gen.curationDocs(seed, NDocs, bench)
@@ -405,7 +443,9 @@ final class CurateSnapshot(seed: Long) extends Workload {
 
   def info: Map[String, Any] = Map(
     "pages" -> NDocs, "parquet_files" -> 1, "html_bytes" -> docs.map(_.html.length.toLong).sum,
-    "benchmark_passages" -> NBench, "waves" -> Waves,
+    "page_bytes_p50" -> med(docs.map(_.html.length.toDouble)),
+    "benchmark_passages" -> NBench, "waves" -> Waves, "bands" -> Bands, "rows_per_band" -> RowsPerBand,
+    "cap_per_source" -> CapPerSource, "hosts" -> Gen.Hosts, "lang_shares" -> Gen.LangShares.toMap,
     "kinds" -> docs.groupBy(_.kind).map { case (k, v) => k -> v.size })
 
   def write(spark: SparkSession, dir: Path): Unit =
@@ -422,14 +462,13 @@ final class CurateSnapshot(seed: Long) extends Workload {
       benchmark = spark.createDataFrame(bench.map(Tuple1(_))).toDF("text"),
       keepLangs = Seq("en", "de", "fr"), minTokens = 20, minStopPct = 5,
       bands = Bands, rowsPerBand = RowsPerBand, threshold = 0.7, nGram = 8,
-      capPerSource = 80, capSalt = "cap", splits = Seq(("train", 9L), ("valid", 1L)),
+      capPerSource = CapPerSource, capSalt = "cap", splits = Seq(("train", 9L), ("valid", 1L)),
       splitSalt = "split")
 
   private def kept(labels: DataFrame, d: DataFrame): DataFrame =
     labels.where(col("stage") === "kept").select("doc_id", "split").join(d, "doc_id")
 
   private var jobNo = 0
-  @volatile private var wavesRerun = 0
 
   /** Writes the kept docs as snapshot waves; `transform` sees each wave. */
   private def waves(spark: SparkSession, k: DataFrame, root: Path, table: String)
@@ -455,11 +494,13 @@ final class CurateSnapshot(seed: Long) extends Workload {
 
   def check(spark: SparkSession, dir: Path, first: Boolean): Check = {
     var fails = Seq.empty[String]
+    val extra = scala.collection.mutable.Map[String, Double]()
     val pages = spark.read.parquet(in(dir, "pages"))
     val groups = rowGroups(spark, dir.resolve("in").resolve("pages"))
     if (groups != Seq(1)) fails :+= s"input is not one file with one row group: $groups"
-    val d = docsOf(pages)
-    val sample = docs.filter(_.id % 40 == 0)
+    // inputs of the check's several wave runs are materialized once
+    val d = materialize(docsOf(pages))
+    val sample = docs.filter(_.id % 10 == 0)
     val got = d.where(col("url").isin(sample.map(_.url): _*)).select("url", "text").collect()
       .map(r => r.getString(0) -> md5hex(r.getString(1).getBytes("UTF-8"))).toMap
     val bad = sample.count(x => !got.get(x.url).contains(md5hex(Extractor.extractText(x.html).getBytes("UTF-8"))))
@@ -469,7 +510,7 @@ final class CurateSnapshot(seed: Long) extends Workload {
     if (stages.values.sum != NDocs) fails :+= s"curate labelled ${stages.values.sum} of $NDocs docs"
     drops = Seq("lang", "quality", "exact_dup", "near_dup", "contaminated", "capped", "kept")
       .map(s => s -> stages.getOrElse(s, 0L).toDouble).toMap
-    val k = kept(labels, d)
+    val k = materialize(kept(labels, d))
     val root = dir.resolve("snap")
     waves(spark, k, root, "check")(identity)
     SnapshotCatalog.compact(spark, root.toString, "check", targetFiles = 1)
@@ -488,18 +529,19 @@ final class CurateSnapshot(seed: Long) extends Workload {
       val firstCalls = calls
       calls = 0
       val ran = waves(spark, k, root, "resume") { w => calls += 1; w }
-      wavesRerun = firstCalls + calls - Waves
+      val wavesRerun = firstCalls + calls - Waves
       SnapshotCatalog.compact(spark, root.toString, "resume", targetFiles = 1)
       val rd = digest(SnapshotCatalog.read(spark, root.toString, "resume"))
       if (!interrupted) fails :+= "injected wave failure did not interrupt the run"
       if (ran != Waves - 2) fails :+= s"resume ran $ran waves, expected ${Waves - 2}"
       if (wavesRerun != 1) fails :+= s"waves_rerun = $wavesRerun, expected 1"
+      extra += "check.waves_rerun" -> wavesRerun.toDouble
       if (rd != dg) fails :+= s"resumed table $rd != uninterrupted table $dg"
       SnapshotCatalog.dropTable(root.toString, "resume")
     }
-    release(labels, k)
+    release(labels, k, d)
     SnapshotCatalog.dropTable(root.toString, "check")
-    Check(fails, dg, Map("check.urls_sampled" -> sample.size.toDouble))
+    Check(fails, dg, extra.toMap + ("check.urls_sampled" -> sample.size.toDouble))
   }
 
   def split(spark: SparkSession, dir: Path, t: Tracer, probe: Probe): Map[String, Double] = {
@@ -509,6 +551,9 @@ final class CurateSnapshot(seed: Long) extends Workload {
     var labels: DataFrame = null
     t.span("curate", "operators") { labels = curate(spark, dM); noop(labels) }
     val kM = mat(t, kept(labels, dM))
+    // the documents that reach the near-dup stage (survivors of stage 3)
+    val s3M = mat(t, dM.join(labels.where(col("stage").isin("near_dup", "contaminated", "capped", "kept"))
+      .select("doc_id"), "doc_id"))
     release(labels)
     val root = dir.resolve("snap"); val table = "traced"
     val calls = scala.collection.mutable.ArrayBuffer[Long]()
@@ -525,10 +570,10 @@ final class CurateSnapshot(seed: Long) extends Workload {
     val rewritten = bytes(tdir) - bytesWritten
     SnapshotCatalog.dropTable(root.toString, table)
     val (s0, _, _) = probe.snap()
-    val pairs = t.span("dedup_probe", "operators")(Dedup.minhashLsh(dM, "doc_id", "text", Bands, RowsPerBand, 0.7))
+    val pairs = t.span("dedup_probe", "operators")(Dedup.minhashLsh(s3M, "doc_id", "text", Bands, RowsPerBand, 0.7))
     val nPairs = pairs.count()
     val (s1, _, _) = probe.snap()
-    release(pairs, kM, dM, pagesM)
+    release(pairs, s3M, kM, dM, pagesM)
     drops.map { case (s, v) => (if (s == "kept") "operators.curate.kept" else s"operators.curate.drops.$s") -> v } ++ Map(
       "operators.dedup.verify_ratio" -> nPairs.toDouble / math.max(1L, (s1 - s0).joinRows),
       "snap.wave_commit_p50_ms" -> med(waveMs.toSeq),
@@ -536,12 +581,11 @@ final class CurateSnapshot(seed: Long) extends Workload {
       "snap.files_written" -> filesWritten.toDouble,
       "snap.bytes_written" -> bytesWritten.toDouble,
       "snap.compact_s" -> compactS,
-      "snap.bytes_rewritten" -> rewritten.toDouble,
-      "snap.waves_rerun" -> wavesRerun.toDouble)
+      "snap.bytes_rewritten" -> rewritten.toDouble)
   }
 
   def kernels(minS: Double): Map[String, Double] =
-    Kernels.html(docs.take(400).map(_.html), minS)
+    Kernels.html(docs.map(_.html), KernelSample, "text", minS)
 
   val ops = Seq("extract_text", "curate", "resumable_run")
 
