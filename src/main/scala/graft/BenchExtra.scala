@@ -15,8 +15,10 @@ import org.apache.spark.sql.SparkSession
  *       GRAFT_PLAN_OUT — if set, write each query's explain("formatted")
  *       to $GRAFT_PLAN_OUT/<name>.txt (plan evidence for plans/r07/).
  *
- * Output: one line per rep, `EXTRA <name> rep=<r> sec=<t>`, plus a final
- * `EXTRA <name> min=<t>` per query. No JSON — the driver's artifact comes
+ * Output: one line per rep, `EXTRA <name> rep=<r> sec=<t>` (or `FAILED:`
+ * with the exception), plus `EXTRA <name> failed=<f>/<reps>` when a rep
+ * failed and `EXTRA <name> min=<t>` over the reps that succeeded (no
+ * `min` line when none did). No JSON — the driver's artifact comes
  * from [[Bench]] alone.
  */
 object BenchExtra {
@@ -87,20 +89,23 @@ object BenchExtra {
         } finally if (df != null)
           org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(df)
       }
-      val times = (1 to reps).map { r =>
+      // a rep that throws is a failure, not a time: it stays out of min=
+      val times = (1 to reps).flatMap { r =>
         s.sparkContext.setJobDescription(s"extra:$name rep$r")
         val t0 = System.nanoTime()
         var df: org.apache.spark.sql.DataFrame = null
-        try {
+        val ok = try {
           df = fn(s, sfDir)
           df.write.format("noop").mode("overwrite").save()
-        } catch { case e: Throwable => println(s"EXTRA $name rep=$r FAILED: $e") }
+          true
+        } catch { case e: Throwable => println(s"EXTRA $name rep=$r FAILED: $e"); false }
         finally if (df != null)
           org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(df)
         val dt = (System.nanoTime() - t0) / 1e9
-        println(f"EXTRA $name rep=$r sec=$dt%.3f")
-        dt
+        if (ok) println(f"EXTRA $name rep=$r sec=$dt%.3f")
+        Option.when(ok)(dt)
       }
+      if (times.size < reps) println(s"EXTRA $name failed=${reps - times.size}/$reps")
       if (times.nonEmpty) println(f"EXTRA $name min=${times.min}%.3f")
       if (sys.env.contains("GRAFT_JOBLOG")) {
         val infos = s.sparkContext.getRDDStorageInfo

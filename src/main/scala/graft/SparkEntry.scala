@@ -26,6 +26,9 @@ import graft.sources.{Fixtures, PagesFromDocs}
  */
 object SparkEntry {
 
+  private val scanSplits = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[(String, String, String), Int]]()
+
   /**
    * Read a fixture table, fanned out to the session's shuffle parallelism
    * when the scan itself plans fewer splits (guide §2.5, "input skew: one
@@ -40,25 +43,26 @@ object SparkEntry {
    * planned, so no 100-TB plan pays a gratuitous payload shuffle — the
    * target tracks spark.sql.shuffle.partitions (SPARK_GRAFT_CPUS in the
    * mains), never a hard-coded core count.
+   *
+   * The planned-split count is cached per session and read settings:
+   * deciding via df.rdd costs a physical planning pass, and most queries
+   * read the same table 2-5 times per invocation. The count is plan
+   * METADATA (file splits), not data, so caching it is safe for the
+   * immutable fixture files. The session is a weak key (a later session
+   * can never inherit an entry), and the split-size confs are part of the
+   * entry's key, so changing them re-plans instead of reusing a stale
+   * count.
    */
-  private def fan(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  // planned-split count per (session, path): deciding fan() via df.rdd
-  // costs a physical planning pass, and most queries read the same table
-  // 2-5 times per invocation — the count is plan METADATA (file splits),
-  // not data, so caching it is safe (the fixture files are immutable for
-  // a session's lifetime)
-  private val scanSplits = new java.util.concurrent.ConcurrentHashMap[(Int, String), Int]()
-
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val df = s.read.parquet(path)
     val target = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val parts = scanSplits.computeIfAbsent((System.identityHashCode(s), path),
-      _ => df.rdd.getNumPartitions)
+    val splits = scanSplits.synchronized {
+      scanSplits.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+    }
+    val key = (path, s.conf.get("spark.sql.files.maxPartitionBytes"),
+      s.conf.get("spark.sql.files.openCostInBytes"))
+    val parts = splits.computeIfAbsent(key, _ => df.rdd.getNumPartitions)
     if (parts < target) df.repartition(target) else df
   }
 
@@ -75,14 +79,34 @@ object SparkEntry {
    * slow shared virtual disk and their writeback taxed the timed region
    * (the r6 ADVICE finding). A real deployment points local.dir at
    * node-local NVMe, so the same choice holds at scale; without the conf
-   * the JVM tmpdir is the fallback. */
+   * the JVM tmpdir is the fallback.
+   *
+   * The returned frames read their scratch tables lazily, so a dir lives
+   * until the JVM exits; a shutdown hook then deletes every dir this JVM
+   * created, and the graft-scratch root once it is empty (a bench's
+   * repeated passes would otherwise fill tmpfs with snapshot output). */
   private def scratch(s: SparkSession, prefix: String): String = {
     val base = s.conf.getOption("spark.local.dir")
       .map(_.split(",")(0))
       .getOrElse(System.getProperty("java.io.tmpdir"))
     val dir = java.nio.file.Paths.get(base, "graft-scratch")
     java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.createTempDirectory(dir, prefix).toString
+    val d = java.nio.file.Files.createTempDirectory(dir, prefix).toFile
+    scratchDirs.add(d)
+    d.toString
+  }
+
+  private val scratchDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+
+  sys.addShutdownHook(scratchDirs.forEach { d =>
+    deleteTree(d)
+    d.getParentFile.delete() // only succeeds once the root is empty
+  })
+
+  /** Deletes a tree, skipping entries that vanish while it runs. */
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
   }
 
   /** Points derived from customer keys (mirrored in latSql/lonSql). */

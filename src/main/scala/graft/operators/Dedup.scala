@@ -41,9 +41,12 @@ object Dedup {
    * neighbours' labels, own label's label). The edge hop alone converges
    * in diameter rounds — a drift chain d1~d2~…~dL would cost L rounds —
    * but the label-of-label jump halves the remaining pointer depth every
-   * round, so convergence is O(log diameter) (the classic pointer-jumping
-   * CC bound). Per round: two hash joins + one aggregate, state
-   * checkpointed like Knn's loop.
+   * round when keys grow along the chain, so convergence is O(log
+   * diameter) there (the classic pointer-jumping CC bound). Keys in
+   * arbitrary order along a chain get no such bound: a 40-key chain in
+   * shuffled key order takes 15 rounds. Per round: two hash joins + one aggregate, state
+   * checkpointed like Knn's loop; round 1 starts from identity labels
+   * and is one aggregate over the edges (no label table, no joins).
    *
    * @param pairs (keyA, keyB) undirected edges
    * @return (key, component) for every key appearing in a pair;
@@ -64,43 +67,43 @@ object Dedup {
       .distinct()
       .persist()
     try {
-      var labels = edges.select(col("src").as("key")).distinct()
-        .withColumn("component", col("key"))
-        .localCheckpoint(true)
+      var labels: DataFrame = null
       var changed = 1L
       var round = 0
       while (changed > 0) {
         round += 1
-        // neighbour labels: for each key, the min label among its neighbours
-        val viaEdges = edges
-          .join(labels.withColumnRenamed("key", "dst"), "dst")
-          .groupBy(col("src").as("key"))
-          .agg(min(col("component")).as("__nbr"))
-        // pointer jump: my current label's current label. Round 1 skips
-        // it — labels are identity there (component == key), so the jump
-        // is provably a self-join returning each key's own label; one
-        // join per consumer saved (q57/q58/q119 all start here)
-        val withJump =
-          if (round == 1) labels.withColumn("__jmp", col("component"))
-          else {
+        // round 1 starts from identity labels (component == key), which
+        // are never materialized: the neighbour min is a plain
+        // groupBy(src) over the edges and the pointer jump is the key
+        // itself. Edges are symmetric, so every key has a neighbour, and no
+        // job materializes the identity labels
+        val (cur, nbr, jmp) =
+          if (round == 1) {
+            val r1 = edges.groupBy(col("src").as("key")).agg(min(col("dst")).as("__nbr"))
+            (r1.withColumn("component", col("key")), col("__nbr"), col("component"))
+          } else {
+            // neighbour labels: for each key, the min label among its neighbours
+            val viaEdges = edges
+              .join(labels.withColumnRenamed("key", "dst"), "dst")
+              .groupBy(col("src").as("key"))
+              .agg(min(col("component")).as("__nbr"))
+            // pointer jump: my current label's current label
             val jump = labels
               .join(labels.select(col("key").as("component"), col("component").as("__jmp")),
                 Seq("component"))
               .select(col("key"), col("__jmp"))
-            labels.join(jump, Seq("key"), "left_outer")
+            (labels.join(jump, Seq("key"), "left_outer").join(viaEdges, Seq("key"), "left_outer"),
+              coalesce(col("__nbr"), col("component")), coalesce(col("__jmp"), col("component")))
           }
         // convergence check rides the SAME action that materializes the
         // round (observe on the checkpoint job): the old label is already
-        // on the row being rewritten, so the former extra join-back +
-        // count() pass per round bought nothing
+        // on the row being rewritten, so no extra join-back + count() pass
         val obs = org.apache.spark.sql.Observation(s"cc_${round}_${System.nanoTime()}")
-        val next = withJump.join(viaEdges, Seq("key"), "left_outer")
-          .select(col("key"),
-            least(col("component"),
-              coalesce(col("__nbr"), col("component")),
-              coalesce(col("__jmp"), col("component"))).as("__new"),
+        val next = cur
+          .select(col("key"), least(col("component"), nbr, jmp).as("__new"),
             col("component").as("__old"))
-          .observe(obs, sum(when(col("__new") =!= col("__old"), 1L).otherwise(0L)).as("chg"))
+          .observe(obs, sum(when(col("__new") =!= col("__old"), 1L).otherwise(0L)).as("chg"),
+            count(lit(1)).as("rows"))
           .select(col("key"), col("__new").as("component"))
           .localCheckpoint(true)
         changed = obs.get("chg") match {
@@ -110,8 +113,11 @@ object Dedup {
         // release the superseded round's checkpoint blocks NOW (nothing
         // references them once the round is materialized); .unpersist()
         // would be a no-op on a checkpointed frame
-        org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(labels)
-        labels = next
+        if (labels != null) org.apache.spark.sql.GraftBridge.releaseCheckpointBlocks(labels)
+        // the next round joins these labels three times: size them by
+        // their observed rows, not by the compounded join estimate
+        labels = org.apache.spark.sql.GraftBridge.withRowCount(next,
+          obs.get("rows").asInstanceOf[Long])
       }
       labels
     } finally edges.unpersist()
@@ -131,33 +137,39 @@ object Dedup {
     out
   }
 
-  /** MinHash signature matrix, long form: (key, h_idx, min_hash).
-   *
-   * The `numHashes` permutation proxies are disjoint hex slices of ONE
-   * md5 per shingle — not numHashes independent md5 calls over an
-   * exploded (shingle × h_idx) table. One hash aggregate computes all
-   * mins side-by-side (single exchange, no row multiplication); the long
-   * form is a cheap post-agg unpivot. Narrower slices only ADD band-key
-   * collisions (false candidate agreements, never disagreements), and
-   * the exact-Jaccard verify stage filters those — so LSH recall is
-   * unaffected while hashing cost drops numHashes-fold.
-   *
-   * Slice width is floor(32 / numHashes) hex chars, so any numHashes in
-   * [1, 32] is accepted (non-divisors leave trailing hex chars unused —
-   * narrower slices only add verify-filtered collisions, see above). */
   /** Tokenize + shingle once: (key, sh: array<string>) — the single frame
    * every minhash stage derives from (see [[minhashLsh]]). */
   def shingleSets(df: DataFrame, key: String, text: String): DataFrame =
     df.withColumn("__ts", TextAnalysis.tokens(col(text)))
       .select(col(key), TextAnalysis.shinglesOf(col("__ts")).as("sh"))
 
+  /** Salt of the extra md5s of [[minhashLong]]: hash j > 0 of shingle s
+   * is md5(s || SliceSalt || j), which DuckDB replays byte for byte. */
+  private val SliceSalt = "#h"
+
+  /** MinHash signature matrix, long form: (key, h_idx, min_hash).
+   *
+   * The `numHashes` permutation proxies are disjoint hex slices of md5s of
+   * each shingle, `w = max(4, 32 / numHashes)` hex chars wide: slice i is
+   * chars [i·w, i·w + w) of the concatenation md5(s) ‖ md5(s ‖ "#h1") ‖
+   * md5(s ‖ "#h2") ‖ …, so ceil(numHashes·w / 32) md5s per shingle. For
+   * numHashes ≤ 8 that is ONE md5, sliced exactly as the DuckDB mirrors do
+   * (`min(substring(md5(s), i·w + 1, w))`); wider shapes add salted md5s
+   * instead of narrowing the slices. The 16-bit floor matters: the
+   * minimum of a narrow slice over a page's hundreds of shingles is
+   * almost always all zeros (at 2 hex chars, "00"), so every pair of
+   * documents would agree on every band and the candidate set — and the
+   * exact-Jaccard verify behind it — would grow with the square of the
+   * corpus. One hash aggregate computes all mins side-by-side (single
+   * exchange, no row multiplication); the long form is a cheap post-agg
+   * unpivot. Non-divisors of 32 below 9 leave trailing hex chars unused. */
   def minhashLong(df: DataFrame, key: String, text: String, numHashes: Int): DataFrame =
     minhashLongFromSets(shingleSets(df, key, text), key, numHashes)
 
   private def minhashLongFromSets(sets: DataFrame, key: String, numHashes: Int): DataFrame = {
-    require(numHashes >= 1 && numHashes <= 32,
-      s"numHashes must be in [1, 32] (md5 has 32 hex chars), got $numHashes")
-    val w = 32 / numHashes
+    require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
+    val w = math.max(4, 32 / numHashes)
+    val md5s = (numHashes * w + 31) / 32
     // explode_outer, NOT explode: inner explode makes Catalyst infer
     // size(arr)>0 constraints that are pushed below the projection and
     // re-evaluate the whole shingle expression 3x per row at the scan
@@ -166,9 +178,10 @@ object Dedup {
     val sh = sets
       .select(col(key), explode_outer(col("sh")).as("s"))
       .where(col("s").isNotNull)
-      .withColumn("__h", md5(col("s")))
+      .select(col(key) +: (0 until md5s).map(j =>
+        md5(if (j == 0) col("s") else concat(col("s"), lit(s"$SliceSalt$j"))).as(s"__h$j")): _*)
     val mins = (0 until numHashes).map(i =>
-      min(substring(col("__h"), i * w + 1, w)).as(s"__m$i"))
+      min(substring(col(s"__h${i * w / 32}"), i * w % 32 + 1, w)).as(s"__m$i"))
     sh.groupBy(col(key))
       .agg(mins.head, mins.tail: _*)
       .select(col(key), explode(array((0 until numHashes).map(i =>
@@ -190,8 +203,10 @@ object Dedup {
    * bands × rowsPerBand = numHashes; a pair is a candidate iff it agrees
    * on ALL hashes of ≥1 band. Output: (key_a, key_b, jaccard) with
    * key_a < key_b and jaccard ≥ threshold, 4-dp rounded.
-   * bands × rowsPerBand may be any value in [1, 32] (see [[minhashLong]]
-   * for the hex-slice width rule when it does not divide 32).
+   * bands × rowsPerBand may be any value ≥ 1; every minhash is at least
+   * 16 bits wide whatever the band shape (see [[minhashLong]] for the
+   * slice-width rule), so unrelated documents rarely agree on a band and
+   * the verify join stays proportional to the true near-dup pairs.
    *
    * The tokenized/shingled corpus is computed ONCE ([[shingleSets]]),
    * persisted, and shared by the signature stage and BOTH sides of the

@@ -13,6 +13,29 @@ object GraftBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /**
+   * A checkpointed frame whose size estimate is `rows` rows.
+   *
+   * A checkpoint's LogicalRDD inherits the optimizer's size estimate of
+   * the plan it materialized, and a join's estimate is the product of its
+   * sides. A loop that joins its own previous checkpoint k times per round
+   * multiplies the digits of that number by about k every round: by round
+   * 12 of a drift chain the BigInt products cost seconds and double with
+   * each round. Iterative operators that know their state's row count
+   * (Dedup.components observes it on the checkpoint job) reset the
+   * estimate here, which also lets the planner broadcast small state.
+   */
+  def withRowCount(df: DataFrame, rows: Long): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val lr = ds.logicalPlan.asInstanceOf[execution.LogicalRDD]
+    val stats = catalyst.plans.logical.Statistics(
+      sizeInBytes = catalyst.plans.logical.statsEstimation.EstimationUtils
+        .getSizePerRow(lr.output) * rows,
+      rowCount = Some(BigInt(rows)))
+    classic.Dataset.ofRows(ds.sparkSession,
+      lr.copy()(ds.sparkSession, Some(stats), Some(lr.constraints)))
+  }
+
+  /**
    * Deterministically release the RDD blocks backing a
    * `localCheckpoint`/`checkpoint`-ed Dataset. `df.unpersist()` is a
    * NO-OP for these — the blocks are RDD-level persisted, not

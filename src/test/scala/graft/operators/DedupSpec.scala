@@ -100,6 +100,93 @@ class DedupSpec extends AnyFunSuite {
     assert(secs < 60, s"chain CC took ${secs}s — pointer jumping regressed?")
   }
 
+  /** Union-find on the driver: key -> min key of its component. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(k: Long): Long = {
+      val p = parent.getOrElseUpdate(k, k)
+      if (p == k) k else { val r = find(p); parent(k) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  test("components matches a driver-side union-find on empty, self-loop, star and drift-chain pairs") {
+    val rnd = new scala.util.Random(11)
+    // a drift chain with its keys in shuffled order along the chain and
+    // each link in a random direction, so labels must flow both ways
+    val chainKeys = rnd.shuffle((200L until 240L).toList)
+    val chain = chainKeys.zip(chainKeys.tail).map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+    val cases = Seq(
+      "empty" -> Seq.empty[(Long, Long)],
+      "self-loop" -> Seq((5L, 5L), (6L, 6L), (6L, 7L)),
+      "star" -> ((101L to 130L).map(l => if (l % 2 == 0) (100L, l) else (l, 100L)) :+ ((131L, 131L))),
+      "drift-chain" -> chain,
+      "mixed" -> (Seq((5L, 5L), (6L, 7L)) ++ chain ++
+        Seq.fill(60)((300L + rnd.nextInt(50), 300L + rnd.nextInt(50)))))
+    for ((name, pairs) <- cases) {
+      val df = pairs.toDF("key_a", "key_b")
+      val got = Dedup.components(df, "key_a", "key_b").as[(Long, Long)].collect()
+      assert(got.map(_._1).distinct.length == got.length, s"$name: a key labelled twice")
+      val want = unionFind(pairs)
+      assert(got.toMap == want, s"$name: ${got.toMap} vs $want")
+      val drops = Dedup.dropKeys(df, "key_a", "key_b").as[(Long, Long)].collect().toSet
+      assert(drops == want.filter { case (k, c) => k != c }.toSet, name)
+    }
+  }
+
+  /** Lowercase hex md5 of a string's UTF-8 bytes. */
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  test("minhashLong slices md5 like the DuckDB mirrors up to 8 hashes, and stays 16-bit beyond") {
+    val small = docs.where(col("doc_id") < 30)
+    val sets = Dedup.shingleSets(small, "doc_id", "text").as[(Long, Seq[String])].collect()
+      .filter(_._2.nonEmpty).toMap
+    assert(sets.size >= 20)
+    for (n <- (1 to 8) ++ Seq(9, 12, 16, 32)) {
+      // the mirrors' formula `min(substring(md5(s), i*w + 1, w))` with
+      // w = 32 / n for n <= 8; above that, 4-hex slices of md5(s),
+      // md5(s || '#h1'), md5(s || '#h2'), ... in order
+      val w = math.max(4, 32 / n)
+      def slice(s: String, i: Int): String = {
+        val j = i * w / 32
+        md5Hex(if (j == 0) s else s"$s#h$j").substring(i * w % 32, i * w % 32 + w)
+      }
+      val want = sets.toSeq.flatMap { case (k, sh) =>
+        (0 until n).map(i => (k, i.toLong, sh.map(slice(_, i)).min))
+      }.toSet
+      val got = Dedup.minhashLong(small, "doc_id", "text", n)
+        .as[(Long, Long, String)].collect().toSet
+      val diff = (got diff want) ++ (want diff got)
+      assert(diff.isEmpty, s"numHashes=$n: ${diff.size} rows differ, e.g. ${diff.take(4)}")
+      assert(got.forall(_._3.length >= 4), s"numHashes=$n: a minhash narrower than 16 bits")
+    }
+  }
+
+  test("minhashLsh at 4 x 4 bands: unrelated documents rarely collide, an edited copy still does") {
+    // 40 documents of 600 tokens, each from its own vocabulary, so no two
+    // share a shingle; doc 40 is doc 0 with one 30-token paragraph rewritten
+    val rnd = new scala.util.Random(7)
+    val texts = (0L until 40L).map(i => i -> Seq.fill(600)(s"d${i}w${rnd.nextInt(1000)}").mkString(" "))
+    val edited = {
+      val ts = texts.head._2.split(" ")
+      (ts.take(300) ++ Seq.tabulate(30)(j => s"edit$j") ++ ts.drop(330)).mkString(" ")
+    }
+    val df = (texts :+ (40L -> edited)).toDF("doc_id", "text")
+    // threshold 0 keeps every candidate pair: the output IS the candidate set
+    val cand = Dedup.minhashLsh(df, "doc_id", "text", bands = 4, rowsPerBand = 4, threshold = 0.0)
+      .as[(Long, Long, Double)].collect()
+    val unrelated = cand.count { case (a, b, _) => !(a == 0L && b == 40L) }
+    assert(unrelated <= 8, s"$unrelated of 780 unrelated pairs became candidates")
+    assert(cand.exists { case (a, b, j) => a == 0L && b == 40L && j > 0.8 },
+      s"the edited copy was not a candidate: ${cand.toSeq}")
+  }
+
   test("ngramJaccard capped jaccard uses full set sizes (lower bound contract)") {
     val df = Seq(
       (1L, "a b c d e f"),
